@@ -36,13 +36,19 @@ across partitionings and resumable runs.
 
 from __future__ import annotations
 
-import collections
-import threading
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.core.partitioning import (
+    fanout_repartition,
+    widen_if_narrow,
+)
+from ai_service_ocr_grading_handler_spark.core.telemetry import (
+    latest,
+    observation_metrics,
+    persist_bounded,
+    register,
+)
 
 # --- corpus with planted duplicates ------------------------------------------
 # 20% of documents get an exact copy (+1M id) and a near copy (+2M id, last
@@ -385,74 +391,6 @@ def in_bucket_pairs_expr(
     return f"flatten(transform({arr}, (x, i) -> transform({inner}, y -> {body})))"
 
 
-# Bounded FIFO of persisted frames from recent minhash invocations.
-# CacheManager holds strong references, so per-invocation persists would
-# otherwise leak for the session's lifetime (a 50-query driver loop
-# accumulates two cache entries per call — found by review). Evicting the
-# *previous* call's frames at plan-BUILD time was worse: building a second
-# plan before executing the first stripped the first plan's persist (the
-# signature pipeline then silently recomputed once per consumer), and the
-# module global was not thread-safe. Now: a lock-guarded deque keeps the
-# last _PERSIST_KEEP invocations' frames live (2 frames each), so
-# interleaved build-then-execute patterns — including concurrent threads —
-# keep their persists as long as no more than _PERSIST_KEEP further
-# invocations intervene before execution; memory stays bounded at
-# 2×_PERSIST_KEEP cache entries either way.
-_PERSIST_KEEP = 4
-_PERSISTED: "collections.deque" = collections.deque()
-_PERSIST_LOCK = threading.Lock()
-
-# Observations attached to recent minhash_lsh_neardups bucket frames
-# (hot-bucket cap telemetry — the "no silent caps" rule), newest last, as
-# (build_id, Observation) so a reported dict carries WHICH invocation it
-# came from (review finding: an empty-input run whose CollectMetrics node
-# the optimizer eliminates would otherwise be silently confused with an
-# older run's telemetry).
-_MINHASH_OBS: "collections.deque" = collections.deque(maxlen=2 * _PERSIST_KEEP)
-_MINHASH_BUILDS = 0
-
-# Same pattern for exact_substr_dedup's k-gram aggregate (hot-gram skew
-# telemetry: how viral is the most-duplicated boilerplate span?).
-_EXACT_SUBSTR_OBS: "collections.deque" = collections.deque(maxlen=2 * _PERSIST_KEEP)
-_EXACT_SUBSTR_BUILDS = 0
-
-
-def newest_completed_metrics(observations: list) -> dict:
-    """Newest (build_id, Observation) whose metrics HAVE completed ->
-    metrics dict + `invocation` (the build id). Never blocks: probes via
-    the JVM Observation's getOrEmpty; on Spark Connect (no JVM handle) an
-    observation cannot be probed without blocking, so it is skipped.
-    Raises RuntimeError when nothing has completed. Note: a query whose
-    optimized plan ELIMINATES the metrics node (e.g. empty input folded
-    away by PropagateEmptyRelation) never completes its observation — the
-    `invocation` field is how callers detect they are reading an older
-    run."""
-    connect_skipped = 0
-    for build_id, obs in reversed(observations):
-        jo = getattr(obs, "_jo", None)
-        if jo is None:  # pragma: no cover - Connect: no non-blocking probe
-            connect_skipped += 1
-            continue
-        try:
-            jmap = jo.getOrEmpty()
-            if jmap.isEmpty():
-                continue
-            out = {str(k): jmap.apply(k) for k in _scala_keys(jmap)}
-            out["invocation"] = build_id
-            return out
-        except Exception:
-            continue
-    if connect_skipped:  # pragma: no cover - Connect path
-        # say WHY, not a misleading "never executed" (review finding): on
-        # Connect there is no non-blocking completion probe, so this getter
-        # cannot report without risking an indefinite block
-        raise RuntimeError(
-            "observation metrics cannot be probed non-blockingly on Spark"
-            " Connect; use Observation.get on a handle you know has executed"
-        )
-    raise RuntimeError("no completed observation to report on")
-
-
 def last_minhash_metrics() -> dict:
     """Hot-bucket telemetry for the newest `minhash_lsh_neardups`
     invocation with COMPLETED metrics: `capped_buckets` (buckets whose
@@ -462,14 +400,7 @@ def last_minhash_metrics() -> dict:
     compare against consecutive calls to detect that a newer run's metrics
     were optimizer-eliminated or not yet executed). Never blocks on a plan
     that was built but not executed."""
-    with _PERSIST_LOCK:
-        candidates = list(_MINHASH_OBS)
-    try:
-        return newest_completed_metrics(candidates)
-    except RuntimeError:
-        raise RuntimeError(
-            "no executed minhash_lsh_neardups invocation to report on"
-        ) from None
+    return latest("minhash_lsh_neardups", observation_metrics)
 
 
 def last_exact_substr_metrics() -> dict:
@@ -479,36 +410,7 @@ def last_exact_substr_metrics() -> dict:
     would have single-partitioned), `dup_grams` (hashes occurring more than
     once), `n_grams` (distinct hashes), and `invocation` (monotonic build
     id, as in `last_minhash_metrics`). Never blocks."""
-    with _PERSIST_LOCK:
-        candidates = list(_EXACT_SUBSTR_OBS)
-    try:
-        return newest_completed_metrics(candidates)
-    except RuntimeError:
-        raise RuntimeError(
-            "no executed exact_substr_dedup invocation to report on"
-        ) from None
-
-
-def _scala_keys(jmap) -> list:
-    it = jmap.keysIterator()
-    keys = []
-    while it.hasNext():
-        keys.append(it.next())
-    return keys
-
-
-def _persist_tracked(frame: DataFrame) -> DataFrame:
-    """Persist `frame` and enqueue it in the bounded eviction window."""
-    frame = frame.persist()
-    with _PERSIST_LOCK:
-        _PERSISTED.append(frame)
-        while len(_PERSISTED) > 2 * _PERSIST_KEEP:
-            stale = _PERSISTED.popleft()
-            try:
-                stale.unpersist(blocking=False)
-            except Exception:
-                pass
-    return frame
+    return latest("exact_substr_dedup", observation_metrics)
 
 
 def minhash_lsh_neardups(
@@ -549,7 +451,7 @@ def minhash_lsh_neardups(
     # persisted, and consumed by BOTH the banding (h31 = h60 % M) and the
     # candidate verification — the round-5 shape re-tokenized and
     # re-hashed every candidate document a second time in the verify.
-    corpus_h = _persist_tracked(
+    corpus_h = persist_bounded(
         widen_if_narrow(df.select(F.col(id_col), "text"), by=F.col(id_col)).select(
             F.col(id_col), F.expr(_SHINGLE_H60_SPARK).alias("h")
         )
@@ -569,10 +471,7 @@ def minhash_lsh_neardups(
     # first action on the result).
     pairs = in_bucket_pairs_expr("ids", "struct(x AS a_id, y AS b_id)")
     obs = Observation()
-    global _MINHASH_BUILDS
-    with _PERSIST_LOCK:
-        _MINHASH_BUILDS += 1
-        _MINHASH_OBS.append((_MINHASH_BUILDS, obs))
+    register("minhash_lsh_neardups", obs)
     cand = (
         bands.groupBy("band_idx", "band_hash")
         .agg(F.array_sort(F.collect_set(id_col)).alias("full_ids"))
@@ -613,8 +512,8 @@ def _verify_candidate_pairs(
     is a per-pair array_intersect fold, so the shuffle carries one array
     per candidate doc and nothing is exploded."""
     # consumed twice (candidate-id frontier + verify); persist so the
-    # signature pipeline runs once (bounded-window eviction, see _PERSISTED)
-    cand = _persist_tracked(cand)
+    # signature pipeline runs once (bounded-window eviction, see core.telemetry)
+    cand = persist_bounded(cand)
     cand_ids = (
         cand.select(F.col("a_id").alias(id_col))
         .union(cand.select(F.col("b_id").alias(id_col)))
@@ -631,7 +530,7 @@ def _verify_candidate_pairs(
         # verify: widen it off the (single-split at bench scale) scan
         # stage — probe the corpus scan, never the broadcast-join plan
         # (see widen_if_narrow)
-        harr = _persist_tracked(
+        harr = persist_bounded(
             widen_if_narrow(
                 corpus.join(cand_ids, id_col, "left_semi"),
                 by=F.col(id_col),
@@ -804,10 +703,7 @@ def minhash_incremental(
         " greatest(x.is_new, y.is_new) AS has_new)".format(id=id_col),
     )
     obs = Observation()
-    global _MINHASH_BUILDS
-    with _PERSIST_LOCK:
-        _MINHASH_BUILDS += 1
-        _MINHASH_OBS.append((_MINHASH_BUILDS, obs))
+    register("minhash_lsh_neardups", obs)
     cand = (
         bands.groupBy("band_idx", "band_hash")
         .agg(
@@ -977,12 +873,9 @@ def simhash_neardup_pairs(
         "struct(x.id AS a_id, y.id AS b_id, bit_count(x.sh ^ y.sh) AS hamming)",
         keep=f"bit_count(x.sh ^ y.sh) <= {int(max_hamming)}",
     )
-    # explicit-N repartition before the explode: the bucket aggregate's
-    # output is a few thousand tiny rows, which AQE's byte-based
-    # coalescing collapses to ~1 partition — but each row fans out to k²
-    # bit_count probes, so the 54.6M-candidate scan ran single-task
-    # (measured; same disease and fix as lsh_neardups)
-    par = bands.sparkSession.sparkContext.defaultParallelism
+    # fan-out exchange before the explode: each of the few thousand bucket
+    # rows expands to k² bit_count probes, and the 54.6M-candidate scan
+    # ran single-task once AQE coalesced the bucket shuffle
     return (
         bands.groupBy("band_idx", "band_key")
         .agg(
@@ -999,7 +892,7 @@ def simhash_neardup_pairs(
             ).alias("members")
         )
         .filter(F.size("members") > 1)
-        .repartition(par, F.col("band_idx"), F.col("band_key"))
+        .transform(fanout_repartition, F.col("band_idx"), F.col("band_key"))
         .select(F.explode(F.expr(pairs)).alias("p"))
         .select("p.a_id", "p.b_id", "p.hamming")
         .distinct()
@@ -1235,12 +1128,9 @@ def exact_substr_dedup(
     # branch — and in the non-broadcast AQE path the probe side re-reads
     # cached fixed-width triples instead of recomputing the gram stream
     # (review finding: the unpersisted form doubled the dominant stage)
-    grams = _persist_tracked(grams)
+    grams = persist_bounded(grams)
     obs = Observation()
-    global _EXACT_SUBSTR_BUILDS
-    with _PERSIST_LOCK:
-        _EXACT_SUBSTR_BUILDS += 1
-        _EXACT_SUBSTR_OBS.append((_EXACT_SUBSTR_BUILDS, obs))
+    register("exact_substr_dedup", obs)
     dup_grams = (
         grams.groupBy("gh")
         .agg(

@@ -18,6 +18,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from ai_service_ocr_grading_handler_spark.core.layout import extract_layout, pack_layout
+from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
 from ai_service_ocr_grading_handler_spark.corpus import golden_text
 
 CHUNKS_PER_PAGE = 8  # 4 rows x 2 columns
@@ -61,10 +62,8 @@ def synth_layout_doc(doc_id: int, text: str) -> bytes:
 def layout_df_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = widen_if_narrow(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

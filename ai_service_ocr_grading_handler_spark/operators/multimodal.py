@@ -26,7 +26,10 @@ from typing import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.core.partitioning import (
+    fanout_repartition,
+    widen_if_narrow,
+)
 
 MAGIC = b"FAKEMM01"
 _HEADER = ">8sBIII"  # magic, kind, width, height, payload_len
@@ -109,13 +112,11 @@ def media_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     the media table is scan output, and anything that fabricates or
     re-headers blobs must run at scan speed, not as an extra Arrow hop
     whose payload bytes round-trip JVM->Python->JVM."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        # documents ships as one small parquet file -> one input split;
-        # spread the downstream kernels across the executors (real media
-        # tables arrive pre-split, this mirrors their layout)
-        .repartition(spark.sparkContext.defaultParallelism)
+    # documents ships as one small parquet file -> one input split;
+    # spread the downstream kernels across the executors (real media
+    # tables arrive pre-split, this mirrors their layout)
+    docs = widen_if_narrow(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     )
     d = F.col("doc_id")
     hex8 = lambda c: F.lpad(F.lower(F.hex(c.cast("bigint"))), 8, "0")
@@ -352,14 +353,10 @@ def stacked_crops_df(spark: SparkSession, sf_dir: str, group: int = 50) -> DataF
             }
         )
 
-    # explicit-N repartition on the group key: the (doc_id, batch_id)
-    # shuffle is tiny in BYTES, so AQE's coalescing collapsed it to one
-    # partition — and every group's pure-Python synth->stack->PNG
-    # round-trip (the actual cost, ~0.2 s per group) ran in ONE task
-    # (measured 11.7 s at sf0.1; ~50 tasks after this). Satisfies
-    # applyInPandas's hashpartitioning requirement, so no extra exchange.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(par, F.col("batch_id")).groupBy("batch_id").applyInPandas(
+    # fan-out exchange on the group key: every group's pure-Python
+    # synth->stack->PNG round-trip (~0.2 s per group) ran in ONE task once
+    # AQE coalesced the byte-tiny (doc_id, batch_id) shuffle
+    return fanout_repartition(docs, F.col("batch_id")).groupBy("batch_id").applyInPandas(
         stack, schema="batch_id int, n_images int, stacked_w int, stacked_h int"
     )
 

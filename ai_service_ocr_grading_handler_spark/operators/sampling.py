@@ -15,6 +15,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ai_service_ocr_grading_handler_spark.core.telemetry import persist_bounded
+
 _FRAC_DENOM = 1 << 31
 
 # uniform [0, 1) fraction from the id: first 31 bits of md5 / 2^31 —
@@ -283,11 +285,7 @@ def dsir_select(
     Measured (round 4, sf0.1, local[32], min-of-3): 1.85 s to fit both
     multinomials over 5k docs x 4096 buckets and select k=100.
     """
-    from ai_service_ocr_grading_handler_spark.operators.dedup import (
-        _persist_tracked,
-    )
-
-    docb = _persist_tracked(
+    docb = persist_bounded(
         _features(corpus, [id_col], text_col, buckets)
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("n_occ"))
@@ -399,11 +397,7 @@ def quality_classifier(
     (shared `_features`), two tiny count tables, a broadcast ratio join
     (≤ `buckets` rows), one per-doc aggregate — no corpus shuffle beyond
     the per-(doc,bucket) combine."""
-    from ai_service_ocr_grading_handler_spark.operators.dedup import (
-        _persist_tracked,
-    )
-
-    docb = _persist_tracked(
+    docb = persist_bounded(
         _features(corpus, [id_col], text_col, buckets)
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("n_occ"))

@@ -28,7 +28,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.core.partitioning import (
+    fanout_repartition,
+    widen_if_narrow,
+)
+from ai_service_ocr_grading_handler_spark.core.telemetry import (
+    latest,
+    observation_metrics,
+    persist_bounded,
+    register,
+)
 
 EMB_DIM = 64
 LSH_PLANES = 16
@@ -209,10 +218,7 @@ def lsh_neardups(
     Buckets are still capped at max_bucket sorted members (the sort key
     was (vec_id, embedding); vec_id is unique, so sorting ids alone keeps
     the exact same survivor set)."""
-    from ai_service_ocr_grading_handler_spark.operators.dedup import (
-        _persist_tracked,
-        in_bucket_pairs_expr,
-    )
+    from ai_service_ocr_grading_handler_spark.operators.dedup import in_bucket_pairs_expr
 
     # the P x dim signature fold is the dominant per-row cost: widen off
     # the single-split scan stage first (no-op on a wide input)
@@ -231,28 +237,22 @@ def lsh_neardups(
         lsh_bucket_col().alias("bucket"),
     )
     # three consumers (bucket groupBy + both join-back sides): persist so
-    # the signature fold runs once (bounded-window eviction, see dedup)
-    sigs = _persist_tracked(sigs)
+    # the signature fold runs once (bounded-window eviction, see core.telemetry)
+    sigs = persist_bounded(sigs)
     pairs = in_bucket_pairs_expr("ids", "struct(x AS a_id, y AS b_id)")
-    # EXPLICIT-N repartitions around the explode: the bucket aggregate
-    # emits only ~|buckets| tiny rows, so AQE's byte-based coalescing
-    # collapses that shuffle to ONE partition and the k(k-1)/2 pair
-    # explosion plus every downstream per-pair op ran single-task
-    # (measured 73 s for the verify stage at sf1.0). Bytes are the wrong
-    # cost model here — each bucket row fans out to k² rows of work. One
-    # slot-count-sized exchange before the explode spreads pair
-    # GENERATION; a second one on (a_id, b_id) after it balances pair
-    # VERIFICATION regardless of bucket skew (the shuffle carries 24-byte
-    # id pairs — the §8 "move keys, not payloads" shape).
-    par = sigs.sparkSession.sparkContext.defaultParallelism
+    # fan-out exchanges around the explode: one before it spreads pair
+    # GENERATION over the ~|buckets| tiny bucket rows; a second one on
+    # a_id after it balances pair VERIFICATION regardless of bucket skew
+    # (the shuffle carries 24-byte id pairs — the §8 "move keys, not
+    # payloads" shape)
     cand = (
         sigs.groupBy("bucket")
         .agg(F.slice(F.array_sort(F.collect_list("vec_id")), 1, max_bucket).alias("ids"))
         .filter(F.size("ids") > 1)
-        .repartition(par, F.col("bucket"))
+        .transform(fanout_repartition, F.col("bucket"))
         .select("bucket", F.explode(F.expr(pairs)).alias("p"))
         .select(F.col("p.a_id").alias("a_id"), F.col("p.b_id").alias("b_id"), "bucket")
-        .repartition(par, F.col("a_id"))
+        .transform(fanout_repartition, F.col("a_id"))
     )
     joined = cand.join(
         sigs.select(
@@ -428,29 +428,12 @@ def ivf_topk(
 
 # --- SemDeDup-style semantic dedup ----------------------------------------------
 
-import collections as _collections
-
-# (build_id, Observation) for semantic_dedup cell-cap telemetry — same
-# contract as dedup._MINHASH_OBS
-_SEMDEDUP_OBS: "_collections.deque" = _collections.deque(maxlen=8)
-_SEMDEDUP_BUILDS = 0
-
 
 def last_semantic_dedup_metrics() -> dict:
     """Cell-cap telemetry for the newest semantic_dedup invocation with
     COMPLETED metrics: `capped_cells`, `max_cell_size`, `n_cells`,
-    `invocation`. Never blocks (see dedup.newest_completed_metrics)."""
-    from ai_service_ocr_grading_handler_spark.operators import dedup as _dd
-
-    with _dd._PERSIST_LOCK:
-        candidates = list(_SEMDEDUP_OBS)
-    try:
-        return _dd.newest_completed_metrics(candidates)
-    except RuntimeError:
-        raise RuntimeError(
-            "no executed semantic_dedup invocation to report on"
-        ) from None
-
+    `invocation`. Never blocks (see core.telemetry.observation_metrics)."""
+    return latest("semantic_dedup", observation_metrics)
 
 
 def semantic_dedup(
@@ -499,13 +482,10 @@ def semantic_dedup(
     # anti-join; without a materialization the 16x64 quantizer fold runs
     # once per consumer (verified in the executed plan — the round-2
     # ReusedExchange lesson). Persist through the shared bounded window.
-    cells = _dd._persist_tracked(cells)
+    cells = persist_bounded(cells)
     pairs = _dd.in_bucket_pairs_expr("vs")
     obs = Observation()
-    global _SEMDEDUP_BUILDS
-    with _dd._PERSIST_LOCK:
-        _SEMDEDUP_BUILDS += 1
-        _SEMDEDUP_OBS.append((_SEMDEDUP_BUILDS, obs))
+    register("semantic_dedup", obs)
     dropped = (
         cells.groupBy("cell")
         .agg(

@@ -35,6 +35,7 @@ from ai_service_ocr_grading_handler_spark.corpus import (
     url_col,
 )
 from ai_service_ocr_grading_handler_spark.core.partitioning import widen_if_narrow
+from ai_service_ocr_grading_handler_spark.core.telemetry import persist_bounded
 from ai_service_ocr_grading_handler_spark.core.textops import LLM_NAME_MAPPING
 from ai_service_ocr_grading_handler_spark.functions import spans
 from ai_service_ocr_grading_handler_spark.operators import ensemble, scoring
@@ -1234,7 +1235,7 @@ def q_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # last materialized shuffle, which here is the whole 5.9M-candidate
     # cosine verify — measured +2.2 s at sf1.0 for a 3k-row output.
     # Bounded persist window, same as the operator's internal frames.
-    out = _dd._persist_tracked(
+    out = persist_bounded(
         _sim.lsh_neardups(_sim.neardup_corpus(spark, sf_dir))
     )
     return out.orderBy("a_id", "b_id")

@@ -15,6 +15,29 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# runtime-settable SQL confs, applied both at build time (`get_spark`) and to
+# an externally provided session (`tune_session`)
+RUNTIME_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
+# Initial shuffle partitions: max(task slots, 32) — 32 on a 4-core box, one
+# per slot from 32 cores up. At and above 32 slots each shuffle runs in a
+# single wave (the old 2x-slots default measured ~40% slower on the
+# shuffle-heaviest query, minhash, at local[32] — two waves of half-sized
+# tasks, pure per-task overhead; an external session's default of 200 is
+# worse still). Below that the floor holds: AQE coalescing only ever merges
+# partitions, so the initial count is its upper bound, and 32 leaves a small
+# session a finer split to coalesce from than one partition per core would.
+def shuffle_partitions_for(slots: int) -> int:
+    return max(slots, 32)
+
 
 def get_spark(
     app_name: str = "ai-service-ocr-grading-handler-spark",
@@ -24,26 +47,15 @@ def get_spark(
     n = DEFAULT_CPUS if cpus is None else int(cpus)
     if n <= 0:
         raise ValueError(f"cpus must be >= 1, got {n}")
+    if shuffle_partitions is None:
+        shuffle_partitions = shuffle_partitions_for(n)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # initial shuffle partitions = task slots: AQE coalescing owns the
-        # downsizing anyway, and the old 2x-slots default measured ~40%
-        # slower on the shuffle-heaviest query (minhash) at local[32] —
-        # two waves of half-sized tasks, pure per-task overhead. On a real
-        # cluster this scales with total cores by the same rule.
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(max(n, 32) if shuffle_partitions is None else shuffle_partitions),
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .config(map=RUNTIME_CONFS)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
@@ -53,28 +65,14 @@ def get_spark(
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally provided session
     (the driver hands us one in `entry`/`queries`)."""
-    # shuffle partitions ARE runtime-settable and matter most: an external
-    # session's default (200) runs the shuffle-heaviest queries in ~6 waves
-    # of undersized tasks — the ~40% regression measured in get_spark's
-    # comment — so the driver path must get the same sizing bench.py does
-    # (review finding).
+    confs = dict(RUNTIME_CONFS)
     try:
         par = int(spark.sparkContext.defaultParallelism)
     except Exception:  # Spark Connect: no sparkContext; keep session value
         par = 0
     if par:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(max(par, 32)))
-        except Exception:
-            pass
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.execution.arrow.maxRecordsPerBatch", "2048"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions_for(par))
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:

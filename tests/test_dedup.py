@@ -4,7 +4,9 @@ Hamming bounds, LSH ANN finding planted duplicates, lang-ID on real scripts."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
+from ai_service_ocr_grading_handler_spark.core import telemetry
 from ai_service_ocr_grading_handler_spark.operators import dedup, similarity, textquality
 
 SF = "/root/testdata/sf0.001"
@@ -184,20 +186,61 @@ def test_semantic_dedup_drops_planted_copies_keeps_originals(spark):
     assert again == survivors
 
 
-def test_minhash_metrics_never_block_on_unexecuted_plan(spark):
-    """Building a newer plan WITHOUT executing it must not hang (or hide)
-    the metrics of the last executed invocation (review finding: the old
-    getter blocked forever on the newest build's Observation)."""
+def _text_rows(spark):
     base = " ".join(f"w{i}" for i in range(40))
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [(i, base + f" t{i % 2}") for i in range(8)], "doc_id bigint, text string"
     )
-    dedup.minhash_lsh_neardups(df, threshold=0.5, max_bucket=2).count()
-    executed = dedup.last_minhash_metrics()
-    assert executed["capped_buckets"] > 0
+
+
+def _vector_rows(spark):
+    return spark.createDataFrame(
+        [(i, [0.5 + (i % 2) * 1e-6] * 64) for i in range(10)],
+        "vec_id bigint, embedding array<float>",
+    )
+
+
+# per Observation kind: corpus, executed build, unexecuted newer build,
+# getter, and the metric the executed build must report as non-zero
+_OBSERVED_KINDS = {
+    "minhash_lsh_neardups": (
+        _text_rows,
+        lambda df: dedup.minhash_lsh_neardups(df, threshold=0.5, max_bucket=2),
+        lambda df: dedup.minhash_lsh_neardups(df, threshold=0.9),
+        dedup.last_minhash_metrics,
+        "capped_buckets",
+    ),
+    "exact_substr_dedup": (
+        _text_rows,
+        lambda df: dedup.exact_substr_dedup(df, k=4),
+        lambda df: dedup.exact_substr_dedup(df, k=8),
+        dedup.last_exact_substr_metrics,
+        "dup_grams",
+    ),
+    "semantic_dedup": (
+        _vector_rows,
+        lambda df: similarity.semantic_dedup(df, max_cell=3),
+        lambda df: similarity.semantic_dedup(df, max_cell=100),
+        similarity.last_semantic_dedup_metrics,
+        "capped_cells",
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_OBSERVED_KINDS))
+def test_metrics_never_block_on_unexecuted_plan(spark, kind):
+    """Building a newer plan WITHOUT executing it must not hang (or hide)
+    the metrics of the last executed invocation (review finding: the old
+    getter blocked forever on the newest build's Observation) — for every
+    Observation kind in the core.telemetry registry."""
+    rows, executed_build, newer_build, getter, metric = _OBSERVED_KINDS[kind]
+    df = rows(spark)
+    executed_build(df).collect()
+    executed = getter()
+    assert executed[metric] > 0
     # newer plan, never executed — getter still returns the executed one
-    dedup.minhash_lsh_neardups(df, threshold=0.9)
-    assert dedup.last_minhash_metrics() == executed
+    newer_build(df)
+    assert getter() == executed
 
 
 def test_minhash_interleaved_builds_keep_persists(spark):
@@ -207,8 +250,8 @@ def test_minhash_interleaved_builds_keep_persists(spark):
     correctly."""
     corpus = dedup.dup_corpus(spark, SF)
     first = dedup.minhash_lsh_neardups(corpus, threshold=0.6)
-    with dedup._PERSIST_LOCK:
-        first_frames = list(dedup._PERSISTED)[-2:]
+    with telemetry._LOCK:
+        first_frames = list(telemetry._PERSISTED)[-2:]
     second = dedup.minhash_lsh_neardups(corpus, threshold=0.9)
     for f in first_frames:
         assert f.storageLevel.useMemory  # still persisted after 2nd build
@@ -552,8 +595,8 @@ def test_minhash_incremental_frontier_violation_no_self_pairs(spark):
 
 def test_persist_window_survives_concurrent_invocations(spark):
     """Dedup invocations running from CONCURRENT threads share the bounded
-    persist FIFO (_PERSISTED). Six concurrent invocations track more
-    frames than the 2*_PERSIST_KEEP window holds, so eviction fires WHILE
+    persist FIFO (core.telemetry._PERSISTED). Six concurrent invocations
+    track more frames than its _WINDOW holds, so eviction fires WHILE
     queries are in flight — eviction must mean unpersist-and-recompute,
     never a wrong or failed result (round-3 review ask: the window was
     locked and bounded but never exercised from threads)."""

@@ -262,11 +262,11 @@ def test_curation_tier_plan_shapes(spark):
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), "dirty ids not broadcast-anti"
 
     plan = qs["pack_sequences"](spark, SF)._jdf.queryExecution().executedPlan().toString()
-    # exactly one REQUIRED shuffle (the group key). A leading
-    # REPARTITION_BY_NUM exchange is the round-6 widen_if_narrow spreading
-    # the token-count regex off a single-split bench-scale scan — it is a
-    # no-op (absent) on production-wide inputs, so it is excluded from the
-    # required-shuffle count rather than allowed unconditionally.
+    # exactly one REQUIRED shuffle (the group key). A REPARTITION_BY_NUM
+    # exchange is widen_if_narrow spreading the token-count regex off a
+    # single-split scan: present iff the documents scan is narrower than
+    # the task slots (test_pack_sequences_wide_input_adds_no_repartition
+    # pins its absence on a wide input)
     required = [
         m
         for m in re.finditer(r"Exchange (hash|range|Single)[^\n]*", plan)
@@ -276,9 +276,41 @@ def test_curation_tier_plan_shapes(spark):
         f"pack_sequences has {len(required)} required shuffles (want 1: the"
         f" group key)"
     )
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    narrow = docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    widen = re.findall(r"Exchange [^\n]*REPARTITION_BY_NUM", plan)
+    assert len(widen) == int(narrow), (
+        f"pack_sequences has {len(widen)} REPARTITION_BY_NUM exchanges"
+        f" (want {int(narrow)}: one widen iff the scan is narrow)"
+    )
 
     plan = qs["semantic_dedup"](spark, SF)._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, "semantic_dedup cells frame lost its persist"
+
+
+def test_pack_sequences_wide_input_adds_no_repartition(spark):
+    """On an input already as wide as the task slots, pack_sequences'
+    widen_if_narrow is a no-op: zero REPARTITION_BY_NUM exchanges, so the
+    group-key shuffle is the only one."""
+    import re
+
+    import pyspark.sql.functions as F
+
+    from ai_service_ocr_grading_handler_spark.operators import packing
+
+    par = spark.sparkContext.defaultParallelism
+    docs = spark.range(0, 200, numPartitions=par).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("token "), F.col("id").cast("string")).alias("text"),
+    )
+    plan = (
+        packing.pack_sequences(docs, max_tokens=64)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "REPARTITION_BY_NUM" not in plan, plan
+    assert len(re.findall(r"Exchange ", plan)) == 1, plan
 
 
 def test_simhash_signature_computed_once(spark):
